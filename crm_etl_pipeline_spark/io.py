@@ -6,6 +6,10 @@ Here a scan is a declarative ``spark.read.parquet`` — Catalyst pushes
 filters to the parquet row-group level and prunes columns, and file
 splits replace the manual offset loop with partition parallelism, so
 at 100 TB the same one-liner becomes a 1000-way parallel scan.
+
+``attach_scalar`` lives here, beside ``table``, because every query
+module already imports this one: it is the engine's one idiom for
+attaching a one-row aggregate to a larger frame.
 """
 
 from __future__ import annotations
@@ -72,7 +76,13 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for the SQL API."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)
+def attach_scalar(df: DataFrame, scalar: DataFrame) -> DataFrame:
+    """Attach every column of the one-row frame ``scalar`` to every row
+    of ``df`` as one uncorrelated scalar subquery (its columns packed in
+    a struct): Catalyst runs the scalar plan once, with no join and no
+    key. A second row fails with SCALAR_SUBQUERY_TOO_MANY_ROWS; an empty
+    ``scalar`` attaches NULLs and keeps every row of ``df``. The value
+    ships with every task, so attach only values bounded by construction
+    (counts, extents, fixed-length arrays)."""
+    packed = scalar.select(F.struct(*scalar.columns)).scalar()
+    return df.withColumn("_scalar", packed).select("*", "_scalar.*").drop("_scalar")

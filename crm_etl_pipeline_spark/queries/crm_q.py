@@ -42,19 +42,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from crm_etl_pipeline_spark.io import table
+from crm_etl_pipeline_spark.io import attach_scalar, table
 from crm_etl_pipeline_spark.registry import query
 
 _FUNNEL = ("signup", "view", "click", "purchase")
-
-
-def _scalar_attach(df: DataFrame, scalar: DataFrame, probe_key) -> DataFrame:
-    """Attach a 1-row scalar frame via a broadcast EQUI-join on a
-    non-foldable always-1 key (the ``tfidf_top_terms`` idiom: a lit(1)
-    key would be constant-folded and degrade to BroadcastNestedLoopJoin).
-    ``probe_key`` must be a column expression provably equal to 1 on
-    every row of ``df``."""
-    return df.withColumn("_k", probe_key).join(F.broadcast(scalar), "_k").drop("_k")
 
 
 @query(
@@ -117,22 +108,7 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
             "users_reached",
         )
         counts = row if counts is None else counts.unionByName(row)
-    # _k must stay 1 even when the funnel is EMPTY: least(_u1, 1) reads
-    # 0 with zero stage-1 users, silently dropping all four stage rows
-    # at the scalar-attach equi-join (observed vs the oracle on a
-    # clickstream-only corpus) — greatest-then-least pins it to 1 while
-    # staying non-foldable (the BNLJ-avoidance convention)
-    first = (
-        stage_first[0]
-        .agg(F.count(F.lit(1)).alias("_u1"))
-        .select(
-            "_u1",
-            F.least(F.greatest(F.col("_u1"), F.lit(1)), F.lit(1)).cast("int").alias("_k"),
-        )
-    )
-    out = _scalar_attach(
-        counts, first, F.least(F.col("stage_idx"), F.lit(1)).cast("int")
-    )
+    out = attach_scalar(counts, stage_first[0].agg(F.count(F.lit(1)).alias("_u1")))
     # empty-funnel guard: zero stage-1 users means 0.0 conversion
     # everywhere, not 0/0 (ANSI crash / NaN divergence)
     conv = F.when(F.col("_u1") == 0, F.lit(0.0)).otherwise(
@@ -216,7 +192,7 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM scoring: per customer recency (days before the newest order
-    anywhere — a broadcast scalar), frequency (order count), monetary
+    anywhere — a scalar attach), frequency (order count), monetary
     (DECIMAL-exact revenue), each cut into quartiles WITHIN the
     customer's market segment (segment-relative scoring, the standard
     practice — and the partitioning that keeps every ntile window
@@ -229,17 +205,10 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("frequency"),
         F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("monetary_dec"),
     )
-    # scalar-side key must be NON-FOLDABLE (tfidf idiom): dayofmonth >= 1
-    # always, but depends on the column, so the attach stays a broadcast
-    # hash join instead of degrading to BroadcastNestedLoopJoin.
-    ref = orders.agg(F.max("o_orderdate").alias("ref_dt")).select(
-        "ref_dt", F.least(F.dayofmonth("ref_dt"), F.lit(1)).cast("int").alias("_k")
-    )
+    ref = orders.agg(F.max("o_orderdate").alias("ref_dt"))
     cust = table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    base = _scalar_attach(
-        percust.join(cust, percust.o_custkey == cust.c_custkey),
-        ref,
-        F.least(F.col("frequency"), F.lit(1)).cast("int"),
+    base = attach_scalar(
+        percust.join(cust, percust.o_custkey == cust.c_custkey), ref
     ).withColumn("recency_days", F.datediff("ref_dt", "last_order"))
     seg = Window.partitionBy("c_mktsegment")
     r_w = seg.orderBy("recency_days", "c_custkey")
@@ -452,15 +421,12 @@ def copurchase_lift_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the order key — pair work is Σ basket-size² with baskets bounded at
     the order's line count (≤ tens), the same bounded-fanout argument
     as LSH in-bucket pairs; never an all-pairs part join. The corpus
-    size attaches via the non-foldable broadcast scalar; top-20
+    size is a scalar attach; top-20
     compiles to TakeOrderedAndProject (no global window)."""
     basket = (
         table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
     )
-    n = basket.agg(F.countDistinct("l_orderkey").alias("n_orders")).select(
-        "n_orders",
-        F.least(F.col("n_orders"), F.lit(1)).cast("int").alias("_k"),
-    )
+    n = basket.agg(F.countDistinct("l_orderkey").alias("n_orders"))
     single = basket.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("c"))
     a = basket.select(F.col("l_orderkey"), F.col("l_partkey").alias("part_a"))
     b = basket.select(F.col("l_orderkey"), F.col("l_partkey").alias("part_b"))
@@ -473,11 +439,7 @@ def copurchase_lift_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ca = single.select(F.col("l_partkey").alias("part_a"), F.col("c").alias("ca"))
     cb = single.select(F.col("l_partkey").alias("part_b"), F.col("c").alias("cb"))
     return (
-        _scalar_attach(
-            pairs.join(ca, "part_a").join(cb, "part_b"),
-            n,
-            F.least(F.col("support"), F.lit(1)).cast("int"),
-        )
+        attach_scalar(pairs.join(ca, "part_a").join(cb, "part_b"), n)
         .select(
             "part_a",
             "part_b",
@@ -548,7 +510,6 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PR_DAMP = 0.85
 _PR_ITERS = 3
 
 
@@ -660,14 +621,10 @@ def copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition("dst")  # round-16: see docstring — one exchange, reused 3x
     )
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    n = deg.agg(F.count(F.lit(1)).alias("nn")).select(
-        "nn", F.least(F.col("nn"), F.lit(1)).cast("int").alias("_k")
+    n = deg.agg(F.count(F.lit(1)).alias("nn"))
+    ranks = attach_scalar(deg.select(F.col("src").alias("node")), n).select(
+        "node", (F.lit(1.0) / F.col("nn")).alias("r")
     )
-    ranks = _scalar_attach(
-        deg.select(F.col("src").alias("node")),
-        n,
-        F.least(F.length(F.col("node").cast("string")), F.lit(1)).cast("int"),
-    ).select("node", (F.lit(1.0) / F.col("nn")).alias("r"))
     for _ in range(_PR_ITERS):
         node_cq = (
             ranks.withColumnRenamed("node", "src")
@@ -684,9 +641,7 @@ def copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("dst")
             .agg(F.sum("cq").alias("sq"))
         )
-        ranks = _scalar_attach(
-            sums, n, F.least(F.length(F.col("dst").cast("string")), F.lit(1)).cast("int")
-        ).select(
+        ranks = attach_scalar(sums, n).select(
             F.col("dst").alias("node"),
             (
                 F.lit(0.15) / F.col("nn")
@@ -996,20 +951,9 @@ def decile_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             "percentile(score, array(0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9))"
         ).alias("q")
-    ).select(
-        "q",
-        F.least(F.greatest(F.size(F.col("q")), F.lit(1)), F.lit(1))
-        .cast("int")
-        .alias("_k"),
     )
     scored = (
-        # non-foldable always-1 key (scores are >= 900, a lit(1) would
-        # constant-fold and degrade the attach to a nested loop)
-        hist.withColumn(
-            "_k",
-            F.least(F.greatest(F.col("score"), F.lit(1.0)), F.lit(1.0)).cast("int"),
-        )
-        .join(F.broadcast(bounds), "_k")
+        attach_scalar(hist, bounds)
         .join(resp, "o_custkey", "left")
         .select(
             (
@@ -1026,10 +970,6 @@ def decile_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = per_decile.agg(
         F.sum("n_customers").alias("tot_n"),
         F.sum("n_responders").alias("tot_resp"),
-    ).select(
-        "tot_n",
-        "tot_resp",
-        F.least(F.greatest(F.col("tot_n"), F.lit(1)), F.lit(1)).cast("int").alias("_k"),
     )
     rate = F.col("n_responders").cast("double") / F.col("n_customers")
     base = F.col("tot_resp").cast("double") / F.col("tot_n")
@@ -1043,11 +983,7 @@ def decile_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_responders").cast("double") / F.col("tot_resp")
     )
     return (
-        per_decile.withColumn(
-            "_k",
-            F.least(F.greatest(F.col("n_customers"), F.lit(1)), F.lit(1)).cast("int"),
-        )
-        .join(F.broadcast(tot), "_k")
+        attach_scalar(per_decile, tot)
         .select(
             "decile",
             "n_customers",

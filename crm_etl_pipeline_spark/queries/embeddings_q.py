@@ -588,9 +588,12 @@ def _ivf_codebook(emb: DataFrame) -> DataFrame:
 def _ivf_cell_inline(frame: DataFrame, codebook: DataFrame) -> DataFrame:
     """``frame`` + a ``cell`` column — nearest-codebook assignment as a
     pure PROJECTION (round-15, guide §2.4): the codebook collapses to a
-    one-row array attached via the non-foldable always-1 equi-key, and
-    the argmin is ``array_min`` over (d2q, cen_label) structs — struct
-    ordering IS the (d2q, cen_label) tiebreak ``_ivf_assign``'s window
+    one-row array attached via a non-foldable always-1 broadcast
+    equi-key — not ``attach_scalar``: the array holds one centroid per
+    data label, so it grows with the label cardinality, and a scalar
+    subquery's value ships with every task — and the argmin is
+    ``array_min`` over (d2q, cen_label) structs — struct ordering IS
+    the (d2q, cen_label) tiebreak ``_ivf_assign``'s window
     encodes, so the assigned cell is bit-identical. Unlike
     ``_ivf_assign`` + join-back this needs NO argmin-window shuffle and
     NO re-join of the payload — the shape a per-micro-batch ingest

@@ -43,7 +43,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from crm_etl_pipeline_spark import lsh
-from crm_etl_pipeline_spark.io import table
+from crm_etl_pipeline_spark.io import attach_scalar, table
 from crm_etl_pipeline_spark.queries.embeddings_q import _fixed_dot_sql
 from crm_etl_pipeline_spark.registry import query
 
@@ -442,20 +442,6 @@ def language_id_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _N_HASHES = 12
 _N_BANDS = 4  # 3 rows per band
-
-
-def _minhash_cols(shingles: Column) -> list[Column]:
-    """Seeded MinHash family: h_j = min over shingles of md5('j|' + s).
-    md5 hex min is a uniform order statistic — the classical MinHash —
-    and is bit-identical across engines (unlike numeric hash builtins).
-    """
-    def seeded_min(j: int) -> Column:
-        # NB: the lambda must be unary — Spark passes the element index
-        # as a second positional arg to binary lambdas, which would
-        # silently replace a `j=j` default with the index column
-        return F.array_min(F.transform(shingles, lambda sh: F.md5(F.concat(F.lit(f"{j}|"), sh))))
-
-    return [seeded_min(j).alias(f"mh{j}") for j in range(_N_HASHES)]
 
 
 def _minhash_cols_sql(shingle_expr: str) -> str:
@@ -1557,22 +1543,11 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     df = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    # corpus-size scalar attached via a broadcast EQUI-join. The key must
-    # be NON-FOLDABLE: a lit(1) key on both sides gets constant-folded by
-    # Catalyst, which drops the equi-condition and degrades the join to
-    # BroadcastNestedLoopJoin. least(col, 1) is provably 1 on both sides
-    # (tf ≥ 1 by construction, n_docs ≥ 1 on any non-empty corpus) but
-    # depends on a column, so the plan stays a BroadcastHashJoin with a
-    # 1-row build side.
-    n_docs = docs.agg(F.count(F.lit(1)).alias("n_docs")).select(
-        "n_docs", F.least(F.col("n_docs"), F.lit(1)).cast("int").alias("_k")
-    )
+    n_docs = docs.agg(F.count(F.lit(1)).alias("n_docs"))
     score = F.col("tf") * (F.col("n_docs").cast("double") / F.col("df"))
     w = Window.partitionBy("doc_id").orderBy(F.col("score").desc(), "tok")
     return (
-        tf.join(df, "tok")
-        .withColumn("_k", F.least(F.col("tf"), F.lit(1)).cast("int"))
-        .join(F.broadcast(n_docs), "_k")
+        attach_scalar(tf.join(df, "tok"), n_docs)
         .withColumn("score", score)
         .withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= 3)
@@ -1821,8 +1796,7 @@ def token_rarity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one explode+groupBy builds the (doc, tok, tf) fact;
     the corpus token histogram re-aggregates that narrow output (never
-    the exploded fact twice); the total is a broadcast scalar attached
-    with the non-foldable-key equi-join (see tfidf_top_terms); the final
+    the exploded fact twice); the total is a scalar attach; the final
     per-doc agg is map-side combinable. Three shuffles total at any
     corpus size."""
     toks = table(spark, sf_dir, "documents").select(
@@ -1830,12 +1804,9 @@ def token_rarity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
     counts = tf.groupBy("tok").agg(F.sum("tf").alias("n_tok"))
-    total = counts.agg(F.sum("n_tok").alias("n_total")).select(
-        "n_total", F.least(F.col("n_total"), F.lit(1)).cast("int").alias("_k")
-    )
+    total = counts.agg(F.sum("n_tok").alias("n_total"))
     rar = (
-        counts.withColumn("_k", F.least(F.col("n_tok"), F.lit(1)).cast("int"))
-        .join(F.broadcast(total), "_k")
+        attach_scalar(counts, total)
         .select("tok", (F.length(F.bin(F.expr("n_total div n_tok"))) - F.lit(1)).alias("rarity"))
     )
     return (
@@ -1962,16 +1933,13 @@ def bm25_topk_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries the doc length through the aggregate (dl is functionally
     dependent on doc_id — MAX is exact and saves a second corpus join);
     df re-aggregates tf's narrow output; corpus stats are a 1-row
-    broadcast attached via the non-foldable-key equi-join (see
-    tfidf_top_terms); the global top-10 compiles to
+    scalar attach; the global top-10 compiles to
     TakeOrderedAndProject — per-partition heads, no single-partition
     window, no full sort."""
     docs = table(spark, sf_dir, "documents")
     stats = docs.select(F.size(_tokens()).alias("dl")).agg(
         F.count(F.lit(1)).alias("n_docs"),
         (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-    ).select(
-        "n_docs", "avgdl", F.least(F.col("n_docs"), F.lit(1)).cast("int").alias("_k")
     )
     tf = (
         docs.select("doc_id", F.size(_tokens()).alias("dl"), F.explode(_tokens()).alias("tok"))
@@ -1988,9 +1956,7 @@ def bm25_topk_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     term_fp = F.floor(idf * satur * F.lit(1000000))
     return (
-        tf.join(df, "tok")
-        .withColumn("_k", F.least(F.col("tf"), F.lit(1)).cast("int"))
-        .join(F.broadcast(stats), "_k")
+        attach_scalar(tf.join(df, "tok"), stats)
         .groupBy("doc_id")
         .agg(
             F.sum(term_fp).alias("score_fp"),
@@ -2122,16 +2088,9 @@ def _hybrid_arm_frames(spark: SparkSession, sf_dir: str):
             F.filter(_tokens(), lambda t: t.isin(*_BM25_TERMS)).alias("ftoks"),
         )
     )
-    stats = (
-        per_doc.agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-        )
-        .select(
-            "n_docs",
-            "avgdl",
-            F.least(F.col("n_docs"), F.lit(1)).cast("int").alias("_k"),
-        )
+    stats = per_doc.agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
     )
     tf = (
         per_doc.select("doc_id", "dl", F.explode("ftoks").alias("tok"))
@@ -2145,25 +2104,25 @@ def _hybrid_arm_frames(spark: SparkSession, sf_dir: str):
     )
     term_fp = F.floor(idf * satur * F.lit(1000000))
     lex_scored = (
-        tf.join(df, "tok")
-        .withColumn("_k", F.least(F.col("tf"), F.lit(1)).cast("int"))
-        .join(F.broadcast(stats), "_k")
+        attach_scalar(tf.join(df, "tok"), stats)
         .groupBy("doc_id")
         .agg(F.sum(term_fp).alias("score_fp"))
     )
 
     emb = _emb(spark, sf_dir).filter(F.col("vec_id").isNotNull())
-    # non-foldable always-1 equi-key (the bm25 stats-attach pattern) so
-    # the probe attach stays a BroadcastHashJoin, not a nested loop;
-    # size(embedding) >= 0 on every post-_emb row, so least(size+1, 1)=1
-    probe = emb.filter(F.col("vec_id") == _RRF_PROBE_ID).select(
-        F.col("embedding").alias("qe"),
-        F.least(F.size("embedding") + F.lit(1), F.lit(1)).cast("int").alias("_k"),
+    # a collided probe id yields several probe rows and a missing one
+    # none: pack them into one array; the explode scores every cand
+    # against each probe row and, for an empty probe, drops every cand
+    # (the oracle's cross join with an empty probe)
+    probe = emb.filter(F.col("vec_id") == _RRF_PROBE_ID).agg(
+        F.collect_list("embedding").alias("qes")
     )
     dense_scored = (
-        emb.select(F.col("vec_id").alias("cand_id"), F.col("embedding").alias("ce"))
-        .withColumn("_k", F.least(F.size("ce") + F.lit(1), F.lit(1)).cast("int"))
-        .join(F.broadcast(probe), "_k")
+        attach_scalar(
+            emb.select(F.col("vec_id").alias("cand_id"), F.col("embedding").alias("ce")),
+            probe,
+        )
+        .select("cand_id", "ce", F.explode("qes").alias("qe"))
         .groupBy("cand_id")
         .agg(F.max(_fixed_dot(F.col("qe"), F.col("ce"))).alias("dotq"))
     )
@@ -2425,14 +2384,8 @@ def rerank_fused_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("lex_fp").alias("min_lex"),
         F.max("dense_fp").alias("max_dense"),
         F.min("dense_fp").alias("min_dense"),
-        # non-foldable always-1 scalar key (the _attach1 contract); the
-        # no-groupBy agg emits exactly one row even on an empty corpus
-        F.least(F.count(F.lit(1)) + F.lit(1), F.lit(1)).cast("int").alias("_k"),
     )
-    # probe key: rrf_fp >= floor(1e9/110) > 0 on every candidate row
-    normed = _attach1(
-        feat, ext, F.least(F.col("rrf_fp"), F.lit(1)).cast("int")
-    ).select(
+    normed = attach_scalar(feat, ext).select(
         "doc_id",
         "lex_rank",
         "dense_rank",
@@ -2565,15 +2518,13 @@ def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _chunk_feats(
-    spark: SparkSession, sf_dir: str, buckets: bool = False
-) -> DataFrame:
+def _chunk_feats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE chunker pass (round 16, guide §1.2) shared by every consumer
     of the chunk-grain scoring chains: run the certified chunker once
     and reliable-checkpoint a NARROW per-chunk feature frame —
     (doc_id, chunk_id, n_chunk_tokens, ftoks = the IN-filtered BM25
-    term list; plus bs = the feature-hash bucket id per token when the
-    dense arm needs it). The stats aggregate, the tf explode and (for
+    term list; bs = the feature-hash bucket id per token for the dense
+    arm). The stats aggregate, the tf explode and (for
     chunk_hybrid_retrieval) the bucket-count build all read this
     checkpoint instead of each re-running the chunker subplan over the
     chunk_text payload. Unlike checkpointing the chunk_text-wide frame
@@ -2586,19 +2537,17 @@ def _chunk_feats(
 
     chunks = chunk_documents(spark, sf_dir)
     toks = F.split(F.col("chunk_text"), " ")
-    cols = [
-        F.col("doc_id"),
-        F.col("chunk_id"),
-        F.col("n_chunk_tokens"),
-        F.filter(toks, lambda t: t.isin(*_BM25_TERMS)).alias("ftoks"),
-    ]
-    if buckets:
-        cols.append(
+    return reliable_checkpoint(
+        chunks.select(
+            "doc_id",
+            "chunk_id",
+            "n_chunk_tokens",
+            F.filter(toks, lambda t: t.isin(*_BM25_TERMS)).alias("ftoks"),
             F.transform(
                 toks, lambda t: _hash_long(t, _CHUNK_HASH_SEED) % _CHUNK_HASH_D
-            ).alias("bs")
+            ).alias("bs"),
         )
-    return reliable_checkpoint(chunks.select(*cols))
+    )
 
 
 def _chunk_bm25_scored(
@@ -2638,10 +2587,6 @@ def _chunk_bm25_scored(
     stats = stats_src.agg(
         F.count(F.lit(1)).alias("n_chunks"),
         (F.sum("n_chunk_tokens").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-    ).select(
-        "n_chunks",
-        "avgdl",
-        F.least(F.col("n_chunks"), F.lit(1)).cast("int").alias("_k"),
     )
     tf = tf_pre.groupBy("doc_id", "chunk_id", "tok").agg(
         F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl")
@@ -2653,9 +2598,7 @@ def _chunk_bm25_scored(
     )
     term_fp = F.floor(idf * satur * F.lit(1000000))
     return (
-        tf.join(df, "tok")
-        .withColumn("_k", F.least(F.col("tf"), F.lit(1)).cast("int"))
-        .join(F.broadcast(stats), "_k")
+        attach_scalar(tf.join(df, "tok"), stats)
         .groupBy("doc_id", "chunk_id")
         .agg(
             F.sum(term_fp).alias("score_fp"),
@@ -2739,9 +2682,8 @@ def chunk_bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the chunker pipelines inside the scan (zero shuffles,
     certified); the IN-filter runs before the tf groupBy so fanout is
     |term matches|, not |chunk tokens|; df re-aggregates tf's narrow
-    output; the 1-row stats broadcast attaches via the non-foldable
-    always-1 equi-key; the global top-10 compiles to
-    TakeOrderedAndProject — per-partition heads, no corpus sort. The
+    output; the 1-row stats attach as a scalar subquery; the global
+    top-10 compiles to TakeOrderedAndProject — per-partition heads, no corpus sort. The
     overlap factor (W/S = 4/3) multiplies the scan constant, not the
     complexity class."""
     return (
@@ -2878,7 +2820,7 @@ def chunk_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-chunk feature frame (ftoks for the BM25 arm, bs for the
     # dense arm) instead of re-running the chunker subplan three times
     # (bm25 stats + bm25 tf + dense bucket build)
-    feats = _chunk_feats(spark, sf_dir, buckets=True)
+    feats = _chunk_feats(spark, sf_dir)
     bm = _chunk_bm25_scored(spark, sf_dir, feats=feats).filter(
         F.col("doc_id").isNotNull()
     )
@@ -3234,8 +3176,8 @@ def boilerplate_line_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     one line-key groupBy whose partial aggregation collapses the heavy
     boilerplate keys map-side (the classic skew case: three keys carry
     30% of rows — AQE skew-join handles the anti-join's build side, and
-    the frequency table itself is tiny), the corpus size attaches via
-    the non-foldable broadcast scalar, and reassembly is one doc-key
+    the frequency table itself is tiny), the corpus size attaches as a
+    scalar, and reassembly is one doc-key
     aggregate with an in-group sort bounded by lines-per-doc. No
     all-pairs anything: frequency gating IS the scalable form of
     boilerplate detection (RefinedWeb §3.2 runs exactly this at
@@ -3270,16 +3212,9 @@ def boilerplate_line_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.posexplode(F.split(F.col("text"), "\n")).alias("pos0", "line"),
     ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "line")
     freq = lines.groupBy("line").agg(F.countDistinct("doc_id").alias("n_docs"))
-    tot = docs.agg(F.count(F.lit(1)).alias("n_total")).select(
-        "n_total",
-        F.least(F.greatest(F.col("n_total"), F.lit(1)), F.lit(1)).cast("int").alias("_k"),
-    )
+    tot = docs.agg(F.count(F.lit(1)).alias("n_total"))
     boiler_lines = (
-        freq.withColumn(
-            "_k",
-            F.least(F.greatest(F.col("n_docs"), F.lit(1)), F.lit(1)).cast("int"),
-        )
-        .join(F.broadcast(tot), "_k")
+        attach_scalar(freq, tot)
         .filter(F.col("n_docs") > 0.05 * F.col("n_total"))
         .select("line")
     )
@@ -3400,21 +3335,10 @@ def language_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.sqrt(F.col("n_docs").cast("double")) * F.lit(1e12)).cast("bigint"),
         )
     )
-    # non-foldable scalar-attach keys (the weighted_sample_allocation
-    # idiom): provably 1 on any non-empty corpus, empty-in/empty-out
-    tot = counts.agg(F.sum("sq_q").alias("z_q")).select(
-        "z_q",
-        F.least(F.greatest(F.col("z_q"), F.lit(1)), F.lit(1)).cast("int").alias("_k"),
-    )
+    tot = counts.agg(F.sum("sq_q").alias("z_q"))
     weight = F.col("sq_q").cast("double") / F.col("z_q").cast("double")
     alloc = (
-        # greatest(...,1) first: length('') == 0 would otherwise vanish the
-        # empty-string language from the quota join (the dq_audit_orders
-        # key-vanish pattern — lang is non-NULL here, so the key must be 1)
-        counts.withColumn(
-            "_k", F.least(F.greatest(F.length("lang"), F.lit(1)), F.lit(1)).cast("int")
-        )
-        .join(F.broadcast(tot), "_k")
+        attach_scalar(counts, tot)
         .select(
             "lang",
             "n_docs",
@@ -3548,15 +3472,6 @@ _BPE_ORACLE = rf"""
 """
 
 
-def _attach1(df: DataFrame, scalar: DataFrame, probe_key) -> DataFrame:
-    """Attach a broadcast-size frame via an EQUI-join on a non-foldable
-    always-1 key (the tfidf_top_terms / crm_q._scalar_attach idiom: a
-    lit(1) key constant-folds and the join degrades to
-    BroadcastNestedLoopJoin). ``probe_key`` must be provably 1 on every
-    row of ``df``; ``scalar`` must already carry its own ``_k`` = 1."""
-    return df.withColumn("_k", probe_key).join(F.broadcast(scalar), "_k").drop("_k")
-
-
 def _bpe_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The trainer family's ONE corpus pass: explode + gate +
     map-side-combined groupBy(word) -> (word, f). Spark twin of the
@@ -3605,7 +3520,7 @@ def _bpe_train(words: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
     merges at odd offsets exactly as ROW_NUMBER() % 2 = 1 did (the
     oracle's unrolled CTE chain is unchanged and pins the semantics).
     Per iteration the only shuffle left is the pair-count groupBy (map-
-    side combinable); the merge itself is a broadcast attach + a
+    side combinable); the merge itself is a scalar attach + a
     projection, so only tok0 and the three 1-row winners are ever
     checkpointed — 4 eager jobs instead of 7, and no vocab-table sorts
     at all. Word length is gated ≤ 16, so the fold's O(len²) array
@@ -3621,7 +3536,6 @@ def _bpe_train(words: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
             ).alias("syms"),
         )
     )
-    key1 = F.least(F.size("syms"), F.lit(1)).cast("int")  # provably 1: word length >= 2
     outs: list[DataFrame] = []
     for k in range(1, _BPE_MERGES + 1):
         pairs = (
@@ -3640,26 +3554,17 @@ def _bpe_train(words: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
         best = (
             pairs.orderBy(F.col("cnt").desc(), "a", "b")
             .limit(1)
-            .select(
-                "a",
-                "b",
-                F.col("cnt").cast("bigint").alias("cnt"),
-                F.least(F.length("a"), F.lit(1)).cast("int").alias("_k"),
-            )
+            .select("a", "b", F.col("cnt").cast("bigint").alias("cnt"))
         )
         best = reliable_checkpoint(best)
-        # LEFT join, not _attach1's inner (round-15 ADVICE): on a
-        # degenerate corpus where an iteration finds ZERO pairs (every
-        # word already one symbol), an inner join would EMPTY the
-        # symbol table, while the oracle's tok{k} CTE LEFT JOINs
-        # merge{k} and keeps it. With a/b NULL the fold's CASE
-        # predicate is NULL -> ELSE branch -> every symbol appended
-        # unchanged: the exact no-op merge the oracle encodes.
+        # on a degenerate corpus where an iteration finds ZERO pairs
+        # (every word already one symbol) ``best`` is empty and attaches
+        # NULL a/b, as the oracle's tok{k} CTE LEFT JOINs merge{k}: the
+        # fold's CASE predicate is NULL -> ELSE branch -> every symbol
+        # appended unchanged, the exact no-op merge the oracle encodes.
         # Unreachable on the fixtures (words gated length>=2, diverse
         # pairs) — pinned by test_bpe_train_empty_merge_noop.
-        tok = tok.withColumn("_k", key1).join(
-            F.broadcast(best), "_k", "left"
-        ).drop("_k").select(
+        tok = attach_scalar(tok, best).select(
             "word",
             "f",
             F.expr(
@@ -3669,16 +3574,11 @@ def _bpe_train(words: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
                 "ELSE concat(acc, array(s)) END)"
             ).alias("syms"),
         )
-        n_syms = (
-            tok.select(F.explode("syms").alias("sym"))
-            .agg(F.countDistinct("sym").alias("n_syms"))
-            .select(
-                "n_syms",
-                F.least(F.col("n_syms") + F.lit(1), F.lit(1)).cast("int").alias("_k"),
-            )
+        n_syms = tok.select(F.explode("syms").alias("sym")).agg(
+            F.countDistinct("sym").alias("n_syms")
         )
         outs.append(
-            _attach1(
+            attach_scalar(
                 best.select(
                     F.lit(k).cast("int").alias("iter"),
                     F.col("a").alias("merge_a"),
@@ -3686,9 +3586,6 @@ def _bpe_train(words: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
                     F.col("cnt").alias("pair_count"),
                 ),
                 n_syms,
-                # non-foldable: merge_a is data; least(iter, 1) would
-                # constant-fold (iter is a literal) and degrade to BNLJ
-                F.least(F.length("merge_a"), F.lit(1)).cast("int"),
             )
         )
     return tok, outs
@@ -3744,9 +3641,8 @@ def bpe_merge_training(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok{k} keeps the unrolled DAG linear instead of exponential (the
     dedup_components lineage-cut discipline) — each checkpoint is
     vocab-sized, not corpus-sized. The two 1-row attaches (the learned
-    rule, the vocab-size scalar) ride the non-foldable equi-key idiom
-    so they stay BroadcastHashJoins. The chain itself lives in
-    ``_bpe_words`` / ``_bpe_train``, shared with bpe_encode and
+    rule, the vocab-size scalar) are scalar subqueries. The chain
+    itself lives in ``_bpe_words`` / ``_bpe_train``, shared with bpe_encode and
     pack_bpe_sequences (which consume the final symbol table this
     query's output only summarizes)."""
     _, outs = _bpe_train(_bpe_words(spark, sf_dir))
@@ -4139,8 +4035,7 @@ def bigram_lm_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     sub-splits at runtime (the skew_salted_join machinery stands by if
     a decade run ever shows AQE insufficient; the sf10 decade ran
     calib-clean without it). |V| and the corpus
-    mean attach via the non-foldable always-1 equi-key so the plan
-    stays BroadcastHashJoin. Everything downstream of the scan is
+    mean attach as scalar subqueries. Everything downstream of the scan is
     grouping and joining on string keys — no Python, no UDFs."""
     # Round-15 reformulation (guide §2.4, measured 2.2 s -> 1.2 s at
     # sf0.1, bit-identical): the r12 shape held tokens at (doc, idx)
@@ -4179,41 +4074,26 @@ def bigram_lm_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "p.w1", "p.w2")
     bi = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     uni = pairs.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
-    v = (
-        docs_arr.select(F.explode("tt").alias("w"))
-        .agg(F.countDistinct("w").alias("vsz"))
-        .select(
-            "vsz", F.least(F.col("vsz") + F.lit(1), F.lit(1)).cast("int").alias("_k")
-        )
+    v = docs_arr.select(F.explode("tt").alias("w")).agg(
+        F.countDistinct("w").alias("vsz")
     )
-    key1 = F.least(F.length("w1"), F.lit(1)).cast("int")
-    scored = (
-        _attach1(pairs.join(bi, ["w1", "w2"]).join(uni, "w1"), v, key1)
-        .select(
-            "doc_id",
-            F.expr("((c12 + 1) * 1000000L) div (c1 + vsz)").alias("pq"),
-        )
+    scored = attach_scalar(pairs.join(bi, ["w1", "w2"]).join(uni, "w1"), v).select(
+        "doc_id",
+        F.expr("((c12 + 1) * 1000000L) div (c1 + vsz)").alias("pq"),
     )
-    per_doc = scored.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_pairs"), F.sum("pq").cast("bigint").alias("s_q")
+    # per_doc feeds the output AND the corpus-mean scalar subquery; the
+    # checkpoint keeps the subquery from re-running the pair joins
+    # (A/B at sf0.1: 1.8 s checkpointed and at the parent, 2.3 s without)
+    per_doc = reliable_checkpoint(
+        scored.groupBy("doc_id").agg(
+            F.count(F.lit(1)).alias("n_pairs"), F.sum("pq").cast("bigint").alias("s_q")
+        )
     )
     corpus = per_doc.agg(
         (F.sum("s_q").cast("double") / F.sum("n_pairs")).alias("corpus_mean")
-    ).select(
-        "corpus_mean",
-        F.least(F.length(F.col("corpus_mean").cast("string")), F.lit(1))
-        .cast("int")
-        .alias("_k"),
     )
     mean_prob = F.col("s_q").cast("double") / F.col("n_pairs")
-    return _attach1(
-        # NULL-SAFE always-1 probe key: n_pairs is a COUNT(*) over a
-        # group, provably >= 1 on every per_doc row even when doc_id is
-        # NULL — length(doc_id) would be NULL there and the equi-join
-        # would silently drop the group while the oracle's CROSS JOIN
-        # keeps it (round-13 ADVICE close)
-        per_doc, corpus, F.least(F.col("n_pairs"), F.lit(1)).cast("int")
-    ).select(
+    return attach_scalar(per_doc, corpus).select(
         "doc_id",
         "n_pairs",
         mean_prob.alias("mean_prob_q"),
@@ -4430,14 +4310,7 @@ def dsir_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("h2_o")
         .withColumn("cum_before", F.col("offset") + F.col("cum_in_group"))
     )
-    tot = w.agg(F.sum("mean_lr_fp").cast("bigint").alias("total")).select(
-        "total", F.least(F.col("total"), F.lit(1)).cast("int").alias("_k")
-    )
-    # NULL-SAFE always-1 probe key: n_feat is a COUNT(*) over a group,
-    # provably >= 1 on every weights row even when doc_id is NULL
-    cum = cum.withColumn("_k", F.least(F.col("n_feat"), F.lit(1)).cast("int")).join(
-        F.broadcast(tot), "_k"
-    )
+    cum = attach_scalar(cum, w.agg(F.sum("mean_lr_fp").cast("bigint").alias("total")))
     lo = F.when(
         F.col("total") > 0, F.expr(f"cum_before * {_DSIR_K} div total")
     ).otherwise(F.lit(0))

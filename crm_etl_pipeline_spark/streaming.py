@@ -911,15 +911,14 @@ def _curve_columns(ev: DataFrame, anchor: DataFrame) -> DataFrame:
     arithmetic as layout_q.zorder_incremental_compact's batch path (the
     store contract: a row's curve position is a function of the row and
     the store's anchor metadata, never of which ingest path carried
-    it). ``anchor`` is the one-row (min_day, _k=1) frame the store was
-    created with; joined as a broadcast so no driver-side collect ever
-    happens, batch or micro-batch."""
+    it). ``anchor`` is the one-row (min_day) frame the store was
+    created with, attached as a scalar subquery, batch or micro-batch."""
     from crm_etl_pipeline_spark import layout
+    from crm_etl_pipeline_spark.io import attach_scalar
     from crm_etl_pipeline_spark.queries.layout_q import ZGRAIN_UBUCKET, ZSEG_SHIFT
 
     return (
-        ev.withColumn("_k", F.lit(1).cast("int"))
-        .join(F.broadcast(anchor), "_k")
+        attach_scalar(ev, anchor)
         .select(
             "event_id",
             "ts",
@@ -1039,9 +1038,7 @@ def zorder_ingest_stream(spark: SparkSession, sf_dir: str, workdir: str) -> str 
     ev = table(spark, sf_dir, "events")
     if ev.isEmpty():
         return None
-    anchor = ev.agg(
-        F.min(F.to_date("ts")).alias("min_day"), F.lit(1).cast("int").alias("_k")
-    )
+    anchor = ev.agg(F.min(F.to_date("ts")).alias("min_day"))
     curved = _curve_columns(ev, anchor)
 
     store = os.path.join(workdir, "events_zseg")

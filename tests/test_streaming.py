@@ -594,6 +594,22 @@ def test_zorder_ingest_stream_micro_batches_and_delta_shape(spark, tmp_path):
     assert n_store == ev.count()
 
 
+def test_curve_columns_plans_without_nested_loop_join(spark):
+    """The store anchor attaches as a scalar subquery. This path runs
+    inside foreachBatch, where the registry-wide plan lint never sees
+    it, so the plan is pinned here: a literal join key on both sides
+    folds away and plans a BroadcastNestedLoopJoin."""
+    ev = normalize_event_ts(spark.read.parquet(f"{SF_DIR}/events.parquet"))
+    anchor = ev.agg(F.min(F.to_date("ts")).alias("min_day"))
+    curved = streaming._curve_columns(ev, anchor)
+    jvm = spark._jvm
+    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    plan = curved._jdf.queryExecution().explainString(mode)
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "Join" not in curved._jdf.queryExecution().optimizedPlan().toString()
+    assert curved.count() == ev.count()
+
+
 def test_dim_enrichment_spans_four_microbatches(spark, tmp_path):
     """The stream-static join must really run per micro-batch: 4 pmod
     chunks × maxFilesPerTrigger=1 → 4 DISTINCT foreachBatch batch_ids

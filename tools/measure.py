@@ -1,14 +1,15 @@
-"""Round-15 optimization measurement harness (guide §1).
+"""Optimization measurement harness.
 
 For each named query (default: the three bench tiers), runs the query
-with the noop sink (times computation, not the sink — guide §1.4),
-best-of-N after warmups, labels jobs (§1.5), and writes
-``plans/r16/<name>_<tag>.txt`` with the ``explain("formatted")`` output
-plus a one-line plan-shape summary (Exchange count, join strategies,
-Python-eval nodes) so before/after plan diffs are mechanical.
+with the noop sink (times computation, not the sink), best-of-N after
+warmups, labels jobs, and writes ``<out>/<name>_<tag>.txt`` with the
+``explain("formatted")`` output plus a one-line plan-shape summary
+(Exchange count, join strategies, Python-eval nodes) so before/after
+plan diffs are mechanical.
 
 Usage:
-  python tools/measure_r16.py [--tag before|after] [--reps 3] [--warm 1] [names...]
+  python tools/measure.py [--tag before|after] [--reps 3] [--warm 1]
+                          [--out plans/measure] [names...]
 
 Prints one JSON line {"tag", "times": {name: sec}, "sf_dir"}.
 """
@@ -61,26 +62,32 @@ def main() -> None:
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("--warm", type=int, default=1)
     ap.add_argument("--no-plans", action="store_true")
+    ap.add_argument(
+        "--out",
+        type=Path,
+        default=Path(__file__).resolve().parent.parent / "plans" / "measure",
+        help="directory for the per-query plan files",
+    )
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     reg = load_all()
     names = args.names or [n for n in HEADLINE + TIER2 + TIER3 if n in reg]
-    outdir = Path(__file__).resolve().parent.parent / "plans" / "r16"
-    outdir.mkdir(parents=True, exist_ok=True)
+    if not args.no_plans:
+        args.out.mkdir(parents=True, exist_ok=True)
 
-    spark = get_spark("measure-r16")
+    spark = get_spark("measure")
     times: dict[str, float] = {}
     for name in names:
         q = reg[name]
         if not args.no_plans:
             plan = _formatted(q.fn(spark, sf_dir))
-            (outdir / f"{name}_{args.tag}.txt").write_text(
+            (args.out / f"{name}_{args.tag}.txt").write_text(
                 f"# {name} — explain('formatted') at {sf_dir} [{args.tag}]\n"
                 f"# shape: {_shape(plan)}\n\n{plan}"
             )
-        spark.sparkContext.setJobDescription(f"r16:{args.tag}:{name}")
+        spark.sparkContext.setJobDescription(f"measure:{args.tag}:{name}")
         for _ in range(args.warm):
             q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         best = float("inf")
