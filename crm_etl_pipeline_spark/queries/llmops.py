@@ -188,6 +188,15 @@ def _shingles_sql(tok_expr: str, n: int = 5) -> str:
 # exact dedup
 
 
+def _content_hash() -> Column:
+    """The exact-dedup identity of ``text``: sha256 of the casefolded,
+    whitespace-collapsed, trimmed text."""
+    normalized = _casefold(
+        F.trim(F.regexp_replace(F.col("text"), "[" + _WS_CLASS + "]+", " "))
+    )
+    return F.sha2(normalized, 256).alias("content_hash")
+
+
 @query(
     "exact_dedup_documents",
     oracle=f"""
@@ -211,10 +220,9 @@ def exact_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical map-side-combine groupBy, and the kept-id rule makes the
     survivor deterministic rather than arrival-order-dependent.
     """
-    corpus = _exact_corpus(spark, sf_dir)
-    normalized = _casefold(F.trim(F.regexp_replace(F.col("text"), "[" + _WS_CLASS + "]+", " ")))
     return (
-        corpus.select("doc_id", F.sha2(normalized, 256).alias("content_hash"))
+        _exact_corpus(spark, sf_dir)
+        .select("doc_id", _content_hash())
         .groupBy("content_hash")
         .agg(
             F.min("doc_id").alias("keep_doc_id"),
@@ -680,6 +688,20 @@ def lsh_bucket_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _near_shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, s = the distinct 5-token shingles) of every _near_corpus
+    doc with >= 5 tokens, checkpointed: each consumer reads it more
+    than once."""
+    from crm_etl_pipeline_spark.checkpointing import reliable_checkpoint
+
+    toks = _tokens()
+    return reliable_checkpoint(
+        _near_corpus(spark, sf_dir)
+        .filter(F.size(toks) >= 5)
+        .select("doc_id", F.array_distinct(_shingles(toks)).alias("s"))
+    )
+
+
 @query(
     "ngram_jaccard_verify",
     oracle=f"""
@@ -706,23 +728,12 @@ def ngram_jaccard_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs only, never all pairs; here the pair list is the fabricated
     +100000 mapping, joined key-to-key).
 
-    Round-15 (guide §2.4, measured 3.6-4.4 s -> 2.3 s at sf0.1,
-    bit-identical): the shingle table is checkpointed ONCE — the
+    The shingle table is the checkpointed _near_shingle_sets: the
     self-join's two sides hash on DIFFERENT keys (doc_id + offset vs
-    doc_id), so no exchange reuse applies and the un-materialized form
-    re-tokenized and re-shingled the corpus twice. The per-pair overlap
-    count also moved from filter+array_contains (O(|a|·|b|) per
-    evaluation) to size(array_intersect) — both sides are distinct
-    arrays, so the count is identical (same expression the
-    prefix-filter verify uses)."""
-    from crm_etl_pipeline_spark.checkpointing import reliable_checkpoint
-
-    toks = _tokens()
-    sh = reliable_checkpoint(
-        _near_corpus(spark, sf_dir)
-        .filter(F.size(toks) >= 5)
-        .select("doc_id", F.array_distinct(_shingles(toks)).alias("s"))
-    )
+    doc_id), so no exchange reuse applies, and un-materialized the
+    corpus would be tokenized and shingled twice. Both sides are
+    distinct arrays, so size(array_intersect) is the overlap count."""
+    sh = _near_shingle_sets(spark, sf_dir)
     a = sh.alias("a")
     b = sh.alias("b")
     inter = F.size(F.array_intersect(F.col("a.s"), F.col("b.s")))
@@ -1329,10 +1340,7 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     gated = corpus.filter((F.size(toks) >= 40) & (distinct_ratio >= 0.3)).select(
         "doc_id", "lang", "text", F.size(toks).alias("n_tokens")
     )
-    normalized = _casefold(F.trim(F.regexp_replace(F.col("text"), "[" + _WS_CLASS + "]+", " ")))
-    hashed = gated.select(
-        "doc_id", "lang", "n_tokens", F.sha2(normalized, 256).alias("content_hash")
-    )
+    hashed = gated.select("doc_id", "lang", "n_tokens", _content_hash())
     # `hashed` feeds both the keep-aggregate and the semi-join probe;
     # the subtree ends in a projection (scan + gates + sha256), which
     # ReuseExchange cannot share, so without a lineage cut the corpus
@@ -1884,6 +1892,60 @@ _BM25_TERMS_SQL = "('" + "', '".join(_BM25_TERMS) + "')"
 # binary64 literals 2.5 (=k1+1), 1.5, 0.75 and 0.25 (=1-b)
 
 
+def _in_bm25_terms(toks: Column) -> Column:
+    return F.filter(toks, lambda t: t.isin(*_BM25_TERMS))
+
+
+def _bm25_scored(units: DataFrame, *keys: str) -> DataFrame:
+    """Fixed-point BM25 over retrieval units (documents or chunks):
+    ``units`` carries the key columns, ``dl`` (the unit's token count)
+    and ``toks`` (its tokens; callers that checkpoint ``units`` keep
+    only the _BM25_TERMS to stay narrow); returns (*keys, score_fp,
+    n_terms_hit).
+
+    The Robertson-Spärck Jones idf is made LINEAR — (N-df+0.5)/(df+0.5)
+    without the log — for the same reason tfidf_top_terms avoids ln():
+    libm last-ulp behavior is not a cross-engine contract, rational
+    arithmetic is. Every per-term score is a fixed expression tree of
+    IEEE binary64 ops on exact integer inputs, parenthesized exactly as
+    the oracles spell it, then scaled-and-floored to a BIGINT
+    micro-score, so the per-unit SUM is an order-independent integer
+    sum. N and avgdl are taken over every unit row.
+
+    Scale shape: tf explodes only the query terms (fanout is |matches|,
+    not |tokens|) and carries dl through the aggregate (dl is
+    functionally dependent on the keys — MAX is exact and saves a
+    second unit join); df re-aggregates tf's narrow output; the unit
+    stats attach as one scalar subquery."""
+    stats = units.agg(
+        F.count(F.lit(1)).alias("n_units"),
+        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
+    )
+    # the term filter sits INSIDE the explode: Catalyst infers a
+    # size(toks) > 0 filter for a bare-column explode and pushes it
+    # through a pipelined caller's projection, tokenizing every unit
+    # twice (chunk_bm25_retrieval read +28 % at sf0.1 that way)
+    tf = (
+        units.select(*keys, "dl", F.explode(_in_bm25_terms(F.col("toks"))).alias("tok"))
+        .groupBy(*keys, "tok")
+        .agg(F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl"))
+    )
+    df = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
+    idf = (F.col("n_units") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
+    satur = (F.col("tf") * F.lit(2.5)) / (
+        F.col("tf") + F.lit(1.5) * (F.lit(0.25) + F.lit(0.75) * (F.col("dl") / F.col("avgdl")))
+    )
+    term_fp = F.floor(idf * satur * F.lit(1000000))
+    return (
+        attach_scalar(tf.join(df, "tok"), stats)
+        .groupBy(*keys)
+        .agg(
+            F.sum(term_fp).alias("score_fp"),
+            F.count(F.lit(1)).alias("n_terms_hit"),
+        )
+    )
+
+
 @query(
     "bm25_topk_search",
     oracle=f"""
@@ -1919,49 +1981,18 @@ _BM25_TERMS_SQL = "('" + "', '".join(_BM25_TERMS) + "')"
 )
 def bm25_topk_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 top-10 retrieval for a fixed query-term set — the lexical
-    ranking half of a retrieval/dedup stack (Robertson-Spärck Jones idf
-    made LINEAR — (N-df+0.5)/(df+0.5) without the log — for the same
-    reason tfidf_top_terms avoids ln(): libm last-ulp behavior is not a
-    cross-engine contract, rational arithmetic is). Every per-term score
-    is a fixed expression tree of IEEE binary64 ops on exact integer
-    inputs — bit-identical in any engine — then scaled-and-floored to a
-    BIGINT micro-score, so the per-document SUM is an order-independent
-    integer sum. Ties break on doc_id.
+    ranking half of a retrieval/dedup stack. Scoring is _bm25_scored's
+    fixed-point tree over every document row; ties break on doc_id.
 
-    Scale shape: tf explodes only matching tokens (the IN filter runs
-    before the groupBy, so fanout is |matches|, not |tokens|) and
-    carries the doc length through the aggregate (dl is functionally
-    dependent on doc_id — MAX is exact and saves a second corpus join);
-    df re-aggregates tf's narrow output; corpus stats are a 1-row
-    scalar attach; the global top-10 compiles to
+    Scale shape: see _bm25_scored; the global top-10 compiles to
     TakeOrderedAndProject — per-partition heads, no single-partition
     window, no full sort."""
-    docs = table(spark, sf_dir, "documents")
-    stats = docs.select(F.size(_tokens()).alias("dl")).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
+    toks = _tokens()
+    units = table(spark, sf_dir, "documents").select(
+        "doc_id", F.size(toks).alias("dl"), toks.alias("toks")
     )
-    tf = (
-        docs.select("doc_id", F.size(_tokens()).alias("dl"), F.explode(_tokens()).alias("tok"))
-        .filter(F.col("tok").isin(*_BM25_TERMS))
-        .groupBy("doc_id", "tok")
-        .agg(F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl"))
-    )
-    df = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    # expression tree mirrors the oracle parenthesization exactly: each
-    # intermediate is one IEEE op on deterministic operands
-    idf = (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-    satur = (F.col("tf") * F.lit(2.5)) / (
-        F.col("tf") + F.lit(1.5) * (F.lit(0.25) + F.lit(0.75) * (F.col("dl") / F.col("avgdl")))
-    )
-    term_fp = F.floor(idf * satur * F.lit(1000000))
     return (
-        attach_scalar(tf.join(df, "tok"), stats)
-        .groupBy("doc_id")
-        .agg(
-            F.sum(term_fp).alias("score_fp"),
-            F.count(F.lit(1)).alias("n_terms_hit"),
-        )
+        _bm25_scored(units, "doc_id")
         .orderBy(F.col("score_fp").desc(), "doc_id")
         .limit(10)
     )
@@ -1977,12 +2008,9 @@ _RRF_DEPTH = 50
 _RRF_PROBE_ID = 0  # dense arm's probe: the embedding registered at vec_id 0
 
 
-# extracted to a constant in round 15 so rerank_fused_topk can embed
-# the SAME two-arm fusion chain as a subquery (the _CHUNKS_SQL /
-# _COMPONENTS_CTES pattern); the rendered hybrid_rank_fusion oracle
-# is md5-pinned byte-identical to the certified pre-extraction form
-# in tests/test_llmops.py::test_hybrid_ctes_rendering_pinned — the
-# Spark side is likewise shared via _hybrid_arm_frames/_hybrid_fuse
+# shared by the hybrid_rank_fusion and rerank_fused_topk oracles; the
+# rendered hybrid_rank_fusion oracle is md5-pinned in
+# tests/test_llmops.py::test_hybrid_ctes_rendering_pinned
 _HYBRID_CTES = f"""lexdocs AS (
       -- keyset non-NULL-key contract: the fusion JOINS the two arms on
       -- the document id, so a NULL id cannot participate in either arm
@@ -2047,67 +2075,32 @@ _HYBRID_CTES = f"""lexdocs AS (
 
 
 def _hybrid_arm_frames(spark: SparkSession, sf_dir: str):
-    """Build the two hybrid-retrieval arm frames SHARED by
-    hybrid_rank_fusion and rerank_fused_topk (the Spark twin of the
-    _HYBRID_CTES extraction): ``lex_scored`` (doc_id, score_fp — the
-    BM25 fixed-point micro-score over non-NULL doc_ids) and
-    ``dense_scored`` (cand_id, dotq — the exact fixed-point inner
-    product against the vec_id-0 probe). Both are corpus-grain narrow
-    frames; consumers that need them more than once checkpoint them
-    (the DSIR `weights` precedent) rather than re-running the corpus
-    passes.
+    """The two document-grain arms of hybrid_rank_fusion and
+    rerank_fused_topk: ``lex_scored`` (doc_id, score_fp, n_terms_hit —
+    BM25 over the non-NULL doc_ids) and ``dense_scored`` (doc_id, dotq —
+    the exact fixed-point inner product of each embedding against the
+    vec_id-0 probe).
 
-    STATS-POPULATION DEVIATION from bm25_topk_search, stated per the
-    round-14 ADVICE: the lexical arm computes n_docs/avgdl over the
-    NON-NULL-doc_id corpus only (the fusion's full-outer join is
-    id-keyed, so NULL ids are excluded symmetrically up front — the
-    keyset non-NULL-key contract), while bm25_topk_search computes its
-    stats over ALL documents. The scoring TREE is verbatim; the stats
-    POPULATION intentionally differs on corpora with NULL doc_ids, so
-    arm score == bm25 score exactly iff the corpus has no NULL ids.
+    The lexical arm's corpus stats (n_docs/avgdl) cover the NON-NULL-id
+    population only (the fusion's full-outer join is id-keyed, so NULL
+    ids are excluded symmetrically up front), while bm25_topk_search
+    takes them over ALL documents: arm score == bm25 score exactly iff
+    the corpus has no NULL ids.
     tests/test_llmops.py::test_hybrid_lexical_arm_null_id_stats pins
-    the intended divergence: the arm over a NULL-id corpus equals
-    bm25_topk_search run on the NULL-stripped corpus."""
+    the arm over a NULL-id corpus to bm25_topk_search on the
+    NULL-stripped corpus."""
     from crm_etl_pipeline_spark.checkpointing import reliable_checkpoint
     from crm_etl_pipeline_spark.queries.embeddings_q import _emb, _fixed_dot
 
     docs = table(spark, sf_dir, "documents").filter(F.col("doc_id").isNotNull())
-    # ONE tokenizing corpus pass (round 16, guide §1.2): the stats
-    # aggregate and the tf explode both need the tokenized text, and as
-    # separate subtrees they each re-scanned and re-split the text
-    # column. Tokenize once into a NARROW per-doc frame (dl + the
-    # IN-filtered token list — a handful of tokens per doc, vs the full
-    # text payload) and reliable-checkpoint it; both consumers read the
-    # checkpoint. Values are unchanged: size(tokens) is dl either way,
-    # and filter-before-explode == explode-then-filter (explode drops
-    # empty/NULL arrays — exactly the docs that contributed no tf rows).
+    # one tokenizing corpus pass: the stats aggregate and the tf explode
+    # both read this narrow checkpoint instead of each re-scanning and
+    # re-splitting the text column
+    toks = _tokens()
     per_doc = reliable_checkpoint(
-        docs.select(
-            "doc_id",
-            F.size(_tokens()).alias("dl"),
-            F.filter(_tokens(), lambda t: t.isin(*_BM25_TERMS)).alias("ftoks"),
-        )
+        docs.select("doc_id", F.size(toks).alias("dl"), _in_bm25_terms(toks).alias("toks"))
     )
-    stats = per_doc.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-    )
-    tf = (
-        per_doc.select("doc_id", "dl", F.explode("ftoks").alias("tok"))
-        .groupBy("doc_id", "tok")
-        .agg(F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl"))
-    )
-    df = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    idf = (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-    satur = (F.col("tf") * F.lit(2.5)) / (
-        F.col("tf") + F.lit(1.5) * (F.lit(0.25) + F.lit(0.75) * (F.col("dl") / F.col("avgdl")))
-    )
-    term_fp = F.floor(idf * satur * F.lit(1000000))
-    lex_scored = (
-        attach_scalar(tf.join(df, "tok"), stats)
-        .groupBy("doc_id")
-        .agg(F.sum(term_fp).alias("score_fp"))
-    )
+    lex_scored = _bm25_scored(per_doc, "doc_id")
 
     emb = _emb(spark, sf_dir).filter(F.col("vec_id").isNotNull())
     # a collided probe id yields several probe rows and a missing one
@@ -2119,45 +2112,40 @@ def _hybrid_arm_frames(spark: SparkSession, sf_dir: str):
     )
     dense_scored = (
         attach_scalar(
-            emb.select(F.col("vec_id").alias("cand_id"), F.col("embedding").alias("ce")),
+            emb.select(F.col("vec_id").alias("doc_id"), F.col("embedding").alias("ce")),
             probe,
         )
-        .select("cand_id", "ce", F.explode("qes").alias("qe"))
-        .groupBy("cand_id")
+        .select("doc_id", "ce", F.explode("qes").alias("qe"))
+        .groupBy("doc_id")
         .agg(F.max(_fixed_dot(F.col("qe"), F.col("ce"))).alias("dotq"))
     )
     return lex_scored, dense_scored
 
 
-def _hybrid_fuse(lex_scored: DataFrame, dense_scored: DataFrame) -> DataFrame:
-    """RRF fusion of the two arm frames: each arm's top-_RRF_DEPTH via
-    TakeOrderedAndProject, rank windows over the <= 50 surviving rows,
-    full-outer id-keyed join, Σ floor(1e9/(60+rank)) — the pre-limit
-    fused frame (doc_id, lex_rank, dense_rank, rrf_fp)."""
-    # top-50 SET via TakeOrderedAndProject first; the rank window then
-    # runs over <= 50 rows (single tiny task — never the corpus)
-    w_lex = Window.orderBy(F.col("score_fp").desc(), F.col("doc_id").asc())
-    lex = (
-        lex_scored.orderBy(F.col("score_fp").desc(), "doc_id")
-        .limit(_RRF_DEPTH)
-        .select("doc_id", F.row_number().over(w_lex).alias("lex_rank"))
-    )
-    w_dense = Window.orderBy(F.col("dotq").desc(), F.col("cand_id").asc())
-    dense = (
-        dense_scored.orderBy(F.col("dotq").desc(), "cand_id")
-        .limit(_RRF_DEPTH)
-        .select("cand_id", F.row_number().over(w_dense).alias("dense_rank"))
-    )
-    fused = lex.join(dense, lex["doc_id"] == dense["cand_id"], "full_outer")
-    part = lambda rank: F.coalesce(  # noqa: E731 — local fused-score term
-        F.expr(f"{10**9}L div ({_RRF_K} + {rank})"), F.lit(0).cast("bigint")
-    )
-    return fused.select(
-        F.coalesce(F.col("doc_id"), F.col("cand_id")).alias("doc_id"),
-        "lex_rank",
-        "dense_rank",
-        (part("lex_rank") + part("dense_rank")).cast("bigint").alias("rrf_fp"),
-    )
+def _rrf_fuse(keys: list[str], *arms: tuple[DataFrame, str, str]) -> DataFrame:
+    """Reciprocal-rank fusion of scored arms, each given as
+    ``(frame, score_col, rank_name)``: every arm keeps its
+    top-_RRF_DEPTH rows by (score DESC, keys) via TakeOrderedAndProject,
+    ranks them with a window over those <= 50 rows, and the arms meet in
+    a full-outer USING join on ``keys`` (which coalesces the keys).
+    Returns (*keys, *rank_names, rrf_fp = Σ floor(1e9/(60+rank)) over
+    the arms a row appears in)."""
+    fused = None
+    for frame, score, rank in arms:
+        order = [F.col(score).desc(), *[F.col(k).asc() for k in keys]]
+        top = (
+            frame.orderBy(*order)
+            .limit(_RRF_DEPTH)
+            .select(*keys, F.row_number().over(Window.orderBy(*order)).alias(rank))
+        )
+        fused = top if fused is None else fused.join(top, keys, "full_outer")
+    ranks = [rank for _, _, rank in arms]
+    parts = [
+        F.coalesce(F.expr(f"{10**9}L div ({_RRF_K} + {r})"), F.lit(0).cast("bigint"))
+        for r in ranks
+    ]
+    rrf = sum(parts[1:], parts[0]).cast("bigint")
+    return fused.select(*keys, *ranks, rrf.alias("rrf_fp"))
 
 
 @query(
@@ -2181,14 +2169,9 @@ def hybrid_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalization across incomparable scales — exactly why it is the
     default fuser in Elasticsearch/OpenSearch/Vespa.
 
-    The lexical arm is bm25_topk_search's scoring TREE verbatim (same
-    fixed term set, same fixed-point micro-score; a cross-query test
-    pins the two expression trees to each other) over non-NULL doc_ids
-    — with ONE stated deviation (round-14 ADVICE): the corpus stats
-    n_docs/avgdl are computed over the non-NULL-id population only, so
-    arm score == bm25 score exactly iff the corpus has no NULL doc_ids;
-    on a NULL-id corpus the arm equals bm25 run on the NULL-stripped
-    corpus (pinned by test_hybrid_lexical_arm_null_id_stats).
+    The lexical arm is bm25_topk_search's _bm25_scored over non-NULL
+    doc_ids, whose corpus stats therefore cover the non-NULL-id
+    population only (see _hybrid_arm_frames).
     The dense arm ranks by the exact fixed-point INNER PRODUCT against
     the probe registered at vec_id 0 (MIPS retrieval — the trained-
     normalized-embedding serving convention; ann_cosine_topk already
@@ -2205,19 +2188,22 @@ def hybrid_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_id 0 after the _emb corruption gate) yields an empty dense arm
     and the fusion degrades to lexical-only, per RRF's union semantics.
 
-    Scale shape: the lexical arm is the certified BM25 plan (IN-filter
-    before the explode, map-side-combined tf, 1-row broadcast stats);
-    the dense arm is one broadcast probe row against a single linear
-    scan (O(N·d), the ann_cosine_topk shape) collapsed to cand grain by
-    a map-side-combinable MAX. Each arm's top-50 compiles to
-    TakeOrderedAndProject (per-partition heads — no corpus-wide window,
+    Scale shape: the lexical arm is the BM25 plan over one checkpointed
+    tokenizing pass; the dense arm is one broadcast probe row against a
+    single linear scan (O(N·d), the ann_cosine_topk shape) collapsed to
+    cand grain by a map-side-combinable MAX. Each arm's top-50 compiles
+    to TakeOrderedAndProject (per-partition heads — no corpus-wide window,
     no single-partition sort); the rank-assignment windows then run
     over ≤50 rows, and the fusion joins two ≤50-row frames. At 100 TB
     the arms scale as their certified parents; the fusion itself is
     constant-size."""
     lex_scored, dense_scored = _hybrid_arm_frames(spark, sf_dir)
     return (
-        _hybrid_fuse(lex_scored, dense_scored)
+        _rrf_fuse(
+            ["doc_id"],
+            (lex_scored, "score_fp", "lex_rank"),
+            (dense_scored, "dotq", "dense_rank"),
+        )
         .orderBy(F.col("rrf_fp").desc(), "doc_id")
         .limit(10)
     )
@@ -2299,12 +2285,12 @@ def rerank_fused_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs AFTER first-phase retrieval (the cross-encoder slot: a
     cheap-recall candidate generator feeds an expensive-precision
     re-scorer over the tiny candidate set). The candidate set is
-    hybrid_rank_fusion's fused top-10 VERBATIM (the _HYBRID_CTES chain
-    embedded as a subquery; Spark composes the same shared
-    _hybrid_arm_frames/_hybrid_fuse helpers); in place of a learned
-    cross-encoder forward pass — no model weights are a cross-engine
-    contract — the re-score is a deterministic exact feature
-    combination of the three signals the stack already certifies:
+    hybrid_rank_fusion's fused top-10 (the _HYBRID_CTES chain embedded
+    as a subquery; Spark composes _hybrid_arm_frames and _rrf_fuse the
+    same way); in place of a learned cross-encoder forward pass — no
+    model weights are a cross-engine contract — the re-score is a
+    deterministic exact feature combination of the three signals the
+    stack already certifies:
 
       rerank_fp = quality_mult * (6 * lex_frac + 4 * dense_frac)
 
@@ -2348,19 +2334,20 @@ def rerank_fused_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     lex_ck = reliable_checkpoint(lex_scored)
     dense_ck = reliable_checkpoint(dense_scored)
     cands = (
-        _hybrid_fuse(lex_ck, dense_ck)
+        _rrf_fuse(
+            ["doc_id"],
+            (lex_ck, "score_fp", "lex_rank"),
+            (dense_ck, "dotq", "dense_rank"),
+        )
         .orderBy(F.col("rrf_fp").desc(), "doc_id")
         .limit(10)
     )
     ids = cands.select("doc_id")
-    cand_lex = (
-        lex_ck.join(F.broadcast(ids), "doc_id")
-        .withColumnRenamed("score_fp", "lex_fp")
+    cand_lex = lex_ck.join(F.broadcast(ids), "doc_id").select(
+        "doc_id", F.col("score_fp").alias("lex_fp")
     )
-    cand_dense = (
-        dense_ck.withColumnRenamed("cand_id", "doc_id")
-        .join(F.broadcast(ids), "doc_id")
-        .withColumnRenamed("dotq", "dense_fp")
+    cand_dense = dense_ck.join(F.broadcast(ids), "doc_id").withColumnRenamed(
+        "dotq", "dense_fp"
     )
     qual = (
         doc_quality_score(spark, sf_dir)
@@ -2519,30 +2506,24 @@ def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _chunk_feats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ONE chunker pass (round 16, guide §1.2) shared by every consumer
-    of the chunk-grain scoring chains: run the certified chunker once
-    and reliable-checkpoint a NARROW per-chunk feature frame —
-    (doc_id, chunk_id, n_chunk_tokens, ftoks = the IN-filtered BM25
-    term list; bs = the feature-hash bucket id per token for the dense
-    arm). The stats aggregate, the tf explode and (for
-    chunk_hybrid_retrieval) the bucket-count build all read this
-    checkpoint instead of each re-running the chunker subplan over the
-    chunk_text payload. Unlike checkpointing the chunk_text-wide frame
-    (rejected in round 15: ~4/3 of the corpus re-written), ftoks/bs are
-    a few ints/strings per chunk. NULL-id chunks are KEPT (the bm25
-    stats population includes them; consumers filter where their
-    contract says so)."""
+    """One checkpointed chunker pass for chunk_hybrid_retrieval: a
+    NARROW per-chunk frame (doc_id, chunk_id, dl = n_chunk_tokens,
+    toks = the chunk's _BM25_TERMS tokens, bs = the feature-hash bucket
+    id per token for the dense arm) that the BM25 stats, the tf explode
+    and the bucket-count build all read, instead of each re-running the
+    chunker over the chunk_text payload (checkpointing chunk_text
+    itself would re-write ~4/3 of the corpus). NULL-id chunks are kept:
+    the BM25 stats population includes them."""
     from crm_etl_pipeline_spark.checkpointing import reliable_checkpoint
     from crm_etl_pipeline_spark.queries.sketch_filters_q import _hash_long
 
-    chunks = chunk_documents(spark, sf_dir)
-    toks = F.split(F.col("chunk_text"), " ")
+    toks = _tokens("chunk_text")
     return reliable_checkpoint(
-        chunks.select(
+        chunk_documents(spark, sf_dir).select(
             "doc_id",
             "chunk_id",
-            "n_chunk_tokens",
-            F.filter(toks, lambda t: t.isin(*_BM25_TERMS)).alias("ftoks"),
+            F.col("n_chunk_tokens").alias("dl"),
+            _in_bm25_terms(toks).alias("toks"),
             F.transform(
                 toks, lambda t: _hash_long(t, _CHUNK_HASH_SEED) % _CHUNK_HASH_D
             ).alias("bs"),
@@ -2550,69 +2531,9 @@ def _chunk_feats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _chunk_bm25_scored(
-    spark: SparkSession, sf_dir: str, feats: DataFrame | None = None
-) -> DataFrame:
-    """The chunk-grain BM25 scored frame SHARED by chunk_bm25_retrieval
-    and chunk_hybrid_retrieval (the Spark twin of _CHUNK_BM25_CTES):
-    scores every chunk with bm25_topk_search's fixed-point tree at
-    chunk grain — returns (doc_id, chunk_id, score_fp, n_terms_hit),
-    pre-ranking.
-
-    Without ``feats`` the stats/tf subtrees read the chunker subplan
-    directly — two pipelined passes, NO materialization: the certified
-    round-14 single-consumer shape, which the round-16 A/B measured
-    FASTER at local scale than paying an eager checkpoint (0.77 vs
-    1.05 s — the _kmeans_assign ckpt discipline: single consumers
-    don't pay materialization). chunk_hybrid_retrieval passes its
-    wider checkpointed _chunk_feats frame so all THREE of its chunker
-    passes collapse to one."""
-    if feats is None:
-        chunks = chunk_documents(spark, sf_dir)
-        stats_src = chunks.select("n_chunk_tokens")
-        tf_pre = chunks.select(
-            "doc_id",
-            "chunk_id",
-            F.col("n_chunk_tokens").alias("dl"),
-            F.explode(F.split(F.col("chunk_text"), " ")).alias("tok"),
-        ).filter(F.col("tok").isin(*_BM25_TERMS))
-    else:
-        stats_src = feats.select("n_chunk_tokens")
-        tf_pre = feats.select(
-            "doc_id",
-            "chunk_id",
-            F.col("n_chunk_tokens").alias("dl"),
-            F.explode("ftoks").alias("tok"),
-        )
-    stats = stats_src.agg(
-        F.count(F.lit(1)).alias("n_chunks"),
-        (F.sum("n_chunk_tokens").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-    )
-    tf = tf_pre.groupBy("doc_id", "chunk_id", "tok").agg(
-        F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl")
-    )
-    df = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    idf = (F.col("n_chunks") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-    satur = (F.col("tf") * F.lit(2.5)) / (
-        F.col("tf") + F.lit(1.5) * (F.lit(0.25) + F.lit(0.75) * (F.col("dl") / F.col("avgdl")))
-    )
-    term_fp = F.floor(idf * satur * F.lit(1000000))
-    return (
-        attach_scalar(tf.join(df, "tok"), stats)
-        .groupBy("doc_id", "chunk_id")
-        .agg(
-            F.sum(term_fp).alias("score_fp"),
-            F.count(F.lit(1)).alias("n_terms_hit"),
-        )
-    )
-
-
-# extracted to a constant in round 15 so chunk_hybrid_retrieval can
-# embed the SAME chunk-grain BM25 scoring chain as a subquery (the
-# _HYBRID_CTES pattern); the rendered chunk_bm25_retrieval oracle is
-# md5-pinned byte-identical to the certified round-14 form in
-# tests/test_llmops.py::test_chunk_bm25_ctes_rendering_pinned — the
-# Spark side is likewise shared via _chunk_bm25_scored
+# shared by the chunk_bm25_retrieval and chunk_hybrid_retrieval
+# oracles; the rendered chunk_bm25_retrieval oracle is md5-pinned in
+# tests/test_llmops.py::test_chunk_bm25_ctes_rendering_pinned
 _CHUNK_BM25_CTES = f"""chunks AS ({_CHUNKS_SQL}),
     stats AS (
       SELECT COUNT(*) AS n_chunks,
@@ -2666,11 +2587,9 @@ def chunk_bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     COMPOSITION: the Spark side calls the registered chunk_documents
     plan as a subplan (the dedup_cluster_keep_best precedent) and the
-    oracle embeds the identical chunker via _CHUNKS_SQL (rendered
-    byte-identical to the certified inline form, md5-pinned). Scoring
-    is the BM25 tree verbatim with n_docs -> n_chunks — every per-term
-    score is the same fixed IEEE expression on exact integer inputs,
-    floored to a BIGINT micro-score, summed order-independently.
+    oracle embeds the identical chunker via _CHUNKS_SQL. Scoring is
+    _bm25_scored at chunk grain (n_docs -> n_chunks), with dl the
+    chunker's n_chunk_tokens.
 
     Identity contracts: chunking is per-ROW symmetric (the certified
     chunker's contract), so a collided doc_id's chunks MERGE at the
@@ -2686,8 +2605,12 @@ def chunk_bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-10 compiles to TakeOrderedAndProject — per-partition heads, no corpus sort. The
     overlap factor (W/S = 4/3) multiplies the scan constant, not the
     complexity class."""
+    toks = _tokens("chunk_text")
+    units = chunk_documents(spark, sf_dir).select(
+        "doc_id", "chunk_id", F.col("n_chunk_tokens").alias("dl"), toks.alias("toks")
+    )
     return (
-        _chunk_bm25_scored(spark, sf_dir)
+        _bm25_scored(units, "doc_id", "chunk_id")
         .orderBy(
             F.col("score_fp").desc(),
             F.col("doc_id").asc_nulls_first(),
@@ -2781,8 +2704,8 @@ def chunk_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hybrid_rank_fusion certifies the two-arm fusion at document
     grain; real serving stacks retrieve chunks, so both arms must rank
     the chunker's output): the lexical arm is chunk_bm25_retrieval's
-    scoring chain VERBATIM (_CHUNK_BM25_CTES embedded; Spark composes
-    the shared _chunk_bm25_scored helper), the dense arm scores each
+    scoring chain (_CHUNK_BM25_CTES embedded; Spark calls the same
+    _bm25_scored on chunk units), the dense arm scores each
     chunk's FEATURE-HASHED vector (Weinberger et al., ICML 2009:
     tokens -> D=64 buckets via the cross-engine md5->52-bit idiom,
     chunk vector = bucket counts) against the fixed probe text by the
@@ -2803,10 +2726,8 @@ def chunk_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     a negative operand (counts and token counts are non-negative), so
     the engines' div-rounding modes cannot split.
 
-    Scale shape: the chunker pipelines inside the scan for each arm
-    (the deliberate recompute-over-materialize call — checkpointing
-    the chunk_text-wide frame would write ~4/3 of the corpus to
-    storage, the DSIR explode precedent); the dense arm is one
+    Scale shape: both arms read one checkpointed narrow chunker pass
+    (_chunk_feats); the dense arm is one
     map-side-combinable groupBy to (doc_id, chunk_id, b) grain
     (fanout <= 32 tokens x 1 bucket each), a <= 64-row broadcast probe
     join, and one more combinable groupBy back to chunk grain; both
@@ -2816,33 +2737,13 @@ def chunk_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     passes; the fusion is constant-size."""
     from crm_etl_pipeline_spark.queries.sketch_filters_q import _hash_long
 
-    # one chunker pass (round 16): both arms read the checkpointed
-    # per-chunk feature frame (ftoks for the BM25 arm, bs for the
-    # dense arm) instead of re-running the chunker subplan three times
-    # (bm25 stats + bm25 tf + dense bucket build)
     feats = _chunk_feats(spark, sf_dir)
-    bm = _chunk_bm25_scored(spark, sf_dir, feats=feats).filter(
-        F.col("doc_id").isNotNull()
-    )
-    w_bm = Window.orderBy(
-        F.col("score_fp").desc(), F.col("doc_id").asc(), F.col("chunk_id").asc()
-    )
-    bm_arm = (
-        bm.orderBy(F.col("score_fp").desc(), "doc_id", "chunk_id")
-        .limit(_RRF_DEPTH)
-        .select("doc_id", "chunk_id", F.row_number().over(w_bm).alias("bm25_rank"))
-    )
-
+    bm = _bm25_scored(feats, "doc_id", "chunk_id").filter(F.col("doc_id").isNotNull())
     cvec = (
         feats.filter(F.col("doc_id").isNotNull())
-        .select(
-            "doc_id",
-            "chunk_id",
-            "n_chunk_tokens",
-            F.explode("bs").alias("b"),
-        )
+        .select("doc_id", "chunk_id", "dl", F.explode("bs").alias("b"))
         .groupBy("doc_id", "chunk_id", "b")
-        .agg(F.count(F.lit(1)).alias("c"), F.max("n_chunk_tokens").alias("n_toks"))
+        .agg(F.count(F.lit(1)).alias("c"), F.max("dl").alias("n_toks"))
     )
     qvec = (
         spark.range(1)
@@ -2860,31 +2761,11 @@ def chunk_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("dscore_fp")
         )
     )
-    w_d = Window.orderBy(
-        F.col("dscore_fp").desc(), F.col("doc_id").asc(), F.col("chunk_id").asc()
-    )
-    dense_arm = (
-        dense_scored.orderBy(F.col("dscore_fp").desc(), "doc_id", "chunk_id")
-        .limit(_RRF_DEPTH)
-        .select("doc_id", "chunk_id", F.row_number().over(w_d).alias("dense_rank"))
-    ).withColumnRenamed("doc_id", "d_doc_id").withColumnRenamed("chunk_id", "d_chunk_id")
-
-    fused = bm_arm.join(
-        dense_arm,
-        (bm_arm["doc_id"] == dense_arm["d_doc_id"])
-        & (bm_arm["chunk_id"] == dense_arm["d_chunk_id"]),
-        "full_outer",
-    )
-    part = lambda rank: F.coalesce(  # noqa: E731 — local fused-score term
-        F.expr(f"{10**9}L div ({_RRF_K} + {rank})"), F.lit(0).cast("bigint")
-    )
     return (
-        fused.select(
-            F.coalesce(F.col("doc_id"), F.col("d_doc_id")).alias("doc_id"),
-            F.coalesce(F.col("chunk_id"), F.col("d_chunk_id")).alias("chunk_id"),
-            "bm25_rank",
-            "dense_rank",
-            (part("bm25_rank") + part("dense_rank")).cast("bigint").alias("rrf_fp"),
+        _rrf_fuse(
+            ["doc_id", "chunk_id"],
+            (bm, "score_fp", "bm25_rank"),
+            (dense_scored, "dscore_fp", "dense_rank"),
         )
         .orderBy(F.col("rrf_fp").desc(), "doc_id", "chunk_id")
         .limit(10)
@@ -3027,28 +2908,18 @@ def prefix_filter_setsim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join on prefix shingles with AQE skew handling, pair-grain
     distinct, and a candidates-only verify join — never an all-pairs
     product."""
-    toks = _tokens()
-    sh = (
-        _near_corpus(spark, sf_dir)
-        .filter(F.size(toks) >= 5)
-        .select("doc_id", F.array_distinct(_shingles(toks)).alias("t"))
-    )
-    # the shingle table feeds THREE subtrees (df aggregate, prefix
-    # explode, verify join); without a lineage cut Spark re-tokenizes
-    # and re-shingles the corpus once per consumer inside the single
-    # action. Materialize it once (measured 26% off the sf0.1 wall;
-    # at 100 TB this is the standard shared-subtree checkpoint, same
-    # policy switch as dedup_components' iteration state)
     from crm_etl_pipeline_spark.checkpointing import reliable_checkpoint
 
-    sh = reliable_checkpoint(sh)
+    # the shingle table feeds THREE subtrees (df aggregate, prefix
+    # explode, verify join): read once from its checkpoint
+    sh = _near_shingle_sets(spark, sf_dir)
     df_tab = (
-        sh.select(F.explode("t").alias("tok"))
+        sh.select(F.explode("s").alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("df"))
     )
     exploded = sh.select(
-        "doc_id", F.size("t").alias("n"), F.explode("t").alias("tok")
+        "doc_id", F.size("s").alias("n"), F.explode("s").alias("tok")
     ).join(df_tab, "tok")
     ordered = exploded.groupBy("doc_id", "n").agg(
         F.transform(
@@ -3086,8 +2957,8 @@ def prefix_filter_setsim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b")
         .distinct()
     )
-    ta = sh.select(F.col("doc_id").alias("doc_a"), F.col("t").alias("t_a"))
-    tb = sh.select(F.col("doc_id").alias("doc_b"), F.col("t").alias("t_b"))
+    ta = sh.select(F.col("doc_id").alias("doc_a"), F.col("s").alias("t_a"))
+    tb = sh.select(F.col("doc_id").alias("doc_b"), F.col("s").alias("t_b"))
     inter = F.size(F.array_intersect("t_a", "t_b"))
     union = F.size("t_a") + F.size("t_b") - inter
     return (
@@ -3472,20 +3343,28 @@ _BPE_ORACLE = rf"""
 """
 
 
-def _bpe_words(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The trainer family's ONE corpus pass: explode + gate +
-    map-side-combined groupBy(word) -> (word, f). Spark twin of the
-    ``words`` CTE in _BPE_TRAIN_CTES."""
-    docs = table(spark, sf_dir, "documents")
+def _token_gate(w: Column) -> Column:
+    """The trainer family's word gate: _TOKEN_GATE_RE and length >= 2."""
+    return w.rlike(_TOKEN_GATE_RE) & (F.length(w) >= 2)
+
+
+def _gated_words(docs: DataFrame, *keys: str) -> DataFrame:
+    """(*keys, w): one row per _token_gate-passing word of every
+    non-NULL text, split on the shared _WS_CLASS (see the oracles'
+    comment in _BPE_TRAIN_CTES)."""
     return (
         docs.filter(F.col("text").isNotNull())
-        .select(
-            F.explode(
-                # same shared class as the oracle (see its comment)
-                F.split(F.col("text"), "[" + _WS_CLASS + "]+")
-            ).alias("w")
-        )
-        .filter(F.col("w").rlike(_TOKEN_GATE_RE) & (F.length("w") >= 2))
+        .select(*keys, F.explode(F.split(F.col("text"), "[" + _WS_CLASS + "]+")).alias("w"))
+        .filter(_token_gate(F.col("w")))
+    )
+
+
+def _bpe_words(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The trainer family's ONE corpus pass: gated words +
+    map-side-combined groupBy(word) -> (word, f). Spark twin of the
+    ``words`` CTE in _BPE_TRAIN_CTES."""
+    return (
+        _gated_words(table(spark, sf_dir, "documents"))
         .groupBy(F.col("w").alias("word"))
         .agg(F.count(F.lit(1)).alias("f"))
     )
@@ -3742,13 +3621,7 @@ def bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok_arr, _ = _bpe_train(_bpe_words(spark, sf_dir))
     wenc = _bpe_wenc(tok_arr)
     doc_tok = (
-        table(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull())
-        .select(
-            "doc_id",
-            F.explode(F.split(F.col("text"), "[" + _WS_CLASS + "]+")).alias("w"),
-        )
-        .filter(F.col("w").rlike(_TOKEN_GATE_RE) & (F.length("w") >= 2))
+        _gated_words(table(spark, sf_dir, "documents"), "doc_id")
         .groupBy("doc_id", F.col("w").alias("word"))
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -3890,18 +3763,12 @@ def pack_bpe_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative counts."""
     tok_arr, _ = _bpe_train(_bpe_words(spark, sf_dir))
     wenc = _bpe_wenc(tok_arr)
+    docs = _one_per_doc(
+        table(spark, sf_dir, "documents").select("doc_id", "lang", "text"),
+        ("text", "lang"),
+    )
     doc_tok = (
-        _one_per_doc(
-            table(spark, sf_dir, "documents").select("doc_id", "lang", "text"),
-            ("text", "lang"),
-        )
-        .filter(F.col("text").isNotNull())
-        .select(
-            "doc_id",
-            "lang",
-            F.explode(F.split(F.col("text"), "[" + _WS_CLASS + "]+")).alias("w"),
-        )
-        .filter(F.col("w").rlike(_TOKEN_GATE_RE) & (F.length("w") >= 2))
+        _gated_words(docs, "doc_id", "lang")
         .groupBy("doc_id", "lang", F.col("w").alias("word"))
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -4052,10 +3919,7 @@ def bigram_lm_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _one_per_doc(
         table(spark, sf_dir, "documents").select("doc_id", "text"), ("text",)
     )
-    gated = F.filter(
-        F.split(F.col("text"), "[" + _WS_CLASS + "]+"),
-        lambda w: w.rlike(_TOKEN_GATE_RE) & (F.length(w) >= 2),
-    )
+    gated = F.filter(F.split(F.col("text"), "[" + _WS_CLASS + "]+"), _token_gate)
     docs_arr = reliable_checkpoint(
         docs.filter(F.col("text").isNotNull()).select("doc_id", gated.alias("tt"))
     )

@@ -107,6 +107,35 @@ def compact_store(spark: SparkSession, log_path: str, base_path: str) -> None:
     scd.write_store(merged, base_path)
 
 
+def _route_failures(failures: DataFrame, paths: dict[str, object]) -> None:
+    """Append ``failures`` rows with ``failed_attempts >= DLQ_THRESHOLD``
+    to the DLQ and the rest to the retry queue. Callers persist the
+    frame: it is read by the count job and by both appends."""
+    dead = failures.filter(F.col("failed_attempts") >= DLQ_THRESHOLD)
+    queued = failures.filter(F.col("failed_attempts") < DLQ_THRESHOLD)
+    # skip-empty is LOAD-BEARING, not cosmetic: an empty append still
+    # writes one empty part file, which the drain's next pass picks up
+    # as new input, which appends another empty file — the queue
+    # directory never stops changing and drain_retry_queue's fixpoint
+    # terminator never fires. One aggregate job supplies both branch
+    # counts (vs a per-branch isEmpty job).
+    stats = failures.agg(
+        F.count(F.when(F.col("failed_attempts") >= DLQ_THRESHOLD, 1)).alias("n_dead"),
+        F.count(F.when(F.col("failed_attempts") < DLQ_THRESHOLD, 1)).alias("n_queued"),
+    ).first()
+    # coalesce(1): both branches are batch-bounded, and every drain pass
+    # re-lists and re-opens every file in the queue dir (stream
+    # listing), so one file per hop instead of one per task keeps pass
+    # N's input at N files, not N·tasks (measured: the un-coalesced
+    # replay drain accumulated 109 queue part files over 19 hops).
+    # Production sizes by bytes instead (maxRecordsPerFile / a
+    # REBALANCE hint), as documented for the dedup store.
+    if stats["n_dead"]:
+        dead.coalesce(1).write.mode("append").parquet(str(paths["dlq"]))
+    if stats["n_queued"]:
+        queued.coalesce(1).write.mode("append").parquet(str(paths["retry_queue"]))
+
+
 def run_pipeline(
     spark: SparkSession,
     sf_dir: str,
@@ -161,28 +190,7 @@ def run_pipeline(
             failures = batch.filter(F.col("event_type") == "error").withColumn(
                 "failed_attempts", F.floor(F.col("value")).cast("int") % 12 + 1
             )
-            dead = failures.filter(F.col("failed_attempts") >= DLQ_THRESHOLD)
-            queued = failures.filter(F.col("failed_attempts") < DLQ_THRESHOLD)
-            # skip empty appends: an empty write still creates an empty
-            # part file, and in the retry queue that file would feed the
-            # drain loop a perpetual "new input" signal (see retry_batch).
-            # Both branch counts come from ONE aggregate job over the
-            # persisted batch (two isEmpty probes would each be a job).
-            stats = failures.agg(
-                F.count(F.when(F.col("failed_attempts") >= DLQ_THRESHOLD, 1)).alias("n_dead"),
-                F.count(F.when(F.col("failed_attempts") < DLQ_THRESHOLD, 1)).alias("n_queued"),
-            ).first()
-            # coalesce(1): both branches are batch-bounded row sets, and
-            # every file appended here is RE-LISTED by each subsequent
-            # drain pass (the queue feeds a file-source stream) or DLQ
-            # read — one file per append instead of one per task keeps
-            # the drain loop's per-pass listing/open cost flat (guide
-            # §6). Production sizes by bytes instead (maxRecordsPerFile
-            # / a REBALANCE hint), same as the incremental-dedup store.
-            if stats["n_dead"]:
-                dead.coalesce(1).write.mode("append").parquet(str(paths["dlq"]))
-            if stats["n_queued"]:
-                queued.coalesce(1).write.mode("append").parquet(str(paths["retry_queue"]))
+            _route_failures(failures, paths)
         finally:
             batch.unpersist()
 
@@ -203,7 +211,7 @@ def run_pipeline(
 
 def read_dlq(spark: SparkSession, paths: dict[str, object], sf_dir: str) -> DataFrame:
     """DLQ contents after a bounded run. Empty appends are skipped (see
-    process_batch), so a fixture/scale where no error event crosses
+    _route_failures), so a fixture/scale where no error event crosses
     DLQ_THRESHOLD never creates the dlq directory at all — absence means
     EMPTY, not error. Return a zero-row frame with the run's DLQ schema
     (events columns + failed_attempts) instead of letting the parquet
@@ -256,29 +264,7 @@ def drain_retry_queue(spark: SparkSession, paths: dict[str, object]) -> int:
         bumped = batch.withColumn("failed_attempts", F.col("failed_attempts") + 1)
         bumped = bumped.persist()
         try:
-            dead = bumped.filter(F.col("failed_attempts") >= DLQ_THRESHOLD)
-            requeued = bumped.filter(F.col("failed_attempts") < DLQ_THRESHOLD)
-            # skip-empty is LOAD-BEARING, not cosmetic: an empty append
-            # still writes one empty part file, which the next pass's
-            # stream picks up as new input, which appends another empty
-            # file — the directory never stops changing and the fixpoint
-            # terminator below never fires. One aggregate job supplies
-            # both branch counts (vs a per-branch isEmpty job).
-            stats = bumped.agg(
-                F.count(F.when(F.col("failed_attempts") >= DLQ_THRESHOLD, 1)).alias("n_dead"),
-                F.count(F.when(F.col("failed_attempts") < DLQ_THRESHOLD, 1)).alias("n_queued"),
-            ).first()
-            # coalesce(1): each pass re-lists and re-opens every file in
-            # the queue dir (stream listing) and the requeued set is
-            # batch-bounded, so one file per hop instead of one per task
-            # keeps pass N's input at N files, not N·tasks (guide §6 —
-            # measured: the un-coalesced replay drain accumulated 109
-            # queue part files over 19 hops). Production knob:
-            # maxRecordsPerFile, as documented for the dedup store.
-            if stats["n_dead"]:
-                dead.coalesce(1).write.mode("append").parquet(str(paths["dlq"]))
-            if stats["n_queued"]:
-                requeued.coalesce(1).write.mode("append").parquet(queue_dir)
+            _route_failures(bumped, paths)
         finally:
             bumped.unpersist()
 
@@ -1134,8 +1120,8 @@ def incremental_dedup_stream(
     with monotone mtimes (``dedup_arrival_chunk`` scatters
     clone/original pairs across chunks — see its docstring), drained by
     a real file-source readStream with maxFilesPerTrigger=1.
-    ``foreachBatch``: (1) normalize + sha256 the batch (the
-    exact_dedup_documents normalization, verbatim); (2) collapse the
+    ``foreachBatch``: (1) hash the batch with exact_dedup_documents'
+    llmops._content_hash; (2) collapse the
     batch to one winner per content hash (min doc_id — within one
     chunk, arrival order has no sub-batch grain); (3) LEFT ANTI join
     against the store's accepted hashes; (4) append the survivors.
@@ -1149,11 +1135,7 @@ def incremental_dedup_stream(
     64-hex hash key is uniform by construction — no skew; store size
     is the DISTINCT corpus (the thing dedup exists to bound), never
     the arrival volume."""
-    from crm_etl_pipeline_spark.queries.llmops import (
-        _WS_CLASS,
-        _casefold,
-        _exact_corpus,
-    )
+    from crm_etl_pipeline_spark.queries.llmops import _content_hash, _exact_corpus
 
     corpus = _exact_corpus(spark, sf_dir)
     if corpus.isEmpty():
@@ -1174,15 +1156,12 @@ def incremental_dedup_stream(
         .option("maxFilesPerTrigger", "1")
         .parquet(arrivals)
     )
-    normalized = _casefold(
-        F.trim(F.regexp_replace(F.col("text"), "[" + _WS_CLASS + "]+", " "))
-    )
 
     def dedup_batch(batch: DataFrame, batch_id: int) -> None:
         winners = (
             batch.select(
                 "doc_id",
-                F.sha2(normalized, 256).alias("content_hash"),
+                _content_hash(),
                 dedup_arrival_chunk().alias("arrival_chunk"),
             )
             .groupBy("content_hash")

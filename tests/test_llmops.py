@@ -8,6 +8,8 @@ query here is covered at sf0.01 by test_oracle.py.
 
 from __future__ import annotations
 
+import re
+
 from crm_etl_pipeline_spark.queries.llmops import DUP_OFFSET
 from crm_etl_pipeline_spark.registry import load_all
 
@@ -1231,8 +1233,8 @@ def test_semantic_dedup_invariants(spark):
 
 
 def test_hybrid_fusion_lexical_arm_is_bm25(spark):
-    """The fusion's lexical arm is bm25_topk_search's scoring tree
-    VERBATIM (the docstring's pin): every fused row carrying a
+    """The fusion's lexical arm is bm25_topk_search's scoring tree:
+    every fused row carrying a
     lex_rank <= 10 must name exactly the document bm25_topk_search
     ranks at that position (bm25's output is ordered by
     (score_fp DESC, doc_id) and limited to 10, so position = rank)."""
@@ -1427,6 +1429,26 @@ def test_chunk_hybrid_rrf_arithmetic_and_order(spark):
     assert any(r.dense_rank is not None for r in rows)
 
 
+def test_retrieval_plans_read_the_corpus_once(spark):
+    """Every lexical consumer in the hybrid and chunk-hybrid queries
+    reads its checkpointed tokenizing pass, so their plans scan no
+    documents file; rerank_fused_topk's only documents scan is its
+    quality gate. None of the three plans a BroadcastNestedLoopJoin."""
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted"
+    )
+    for name, doc_scans in (
+        ("hybrid_rank_fusion", 0),
+        ("chunk_hybrid_retrieval", 0),
+        ("rerank_fused_topk", 1),
+    ):
+        df = REGISTRY[name].fn(spark, SF_DIR)
+        plan = df._jdf.queryExecution().explainString(mode)
+        scans = re.findall(r"Location: \S+ \[[^\]]*documents\.parquet\]", plan)
+        assert len(scans) == doc_scans, (name, scans)
+        assert "BroadcastNestedLoopJoin" not in plan, name
+
+
 def test_dsir_resample_draw_count_and_target_skew(spark):
     """DSIR contract: (1) the systematic walk draws EXACTLY K=50 total
     hits whenever any weight is positive (SUM(n_hits) == K by the
@@ -1556,10 +1578,7 @@ def test_chunk_retrieval_scoring_matches_bm25_tree(spark, tmp_path):
     corpus where every document fits in ONE chunk (<= CHUNK_W tokens),
     chunk grain degenerates to doc grain — n_chunks == n_docs, chunk
     dl == doc dl — so chunk_bm25_retrieval's scores must equal
-    bm25_topk_search's EXACTLY, value for value. This guards the third
-    copy of the BM25 expression tree against drift (the triplication
-    is deliberate: re-rendering the certified bm25/hybrid bytes around
-    a shared helper was judged riskier than pinned duplication)."""
+    bm25_topk_search's EXACTLY, value for value."""
     import shutil
 
     from pyspark.sql import functions as F
